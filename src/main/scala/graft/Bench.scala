@@ -91,8 +91,10 @@ object Bench {
     // sibling artifact with ALL per-query timings: the headline line
     // truncates to the slowest ~keep for the output window, which made
     // sub-cutoff movers invisible round-over-round — the full map goes
-    // to a file the driver commits alongside BENCH_r{N}.json
-    try {
+    // to a sidecar file kept next to the BENCH_r{N}.json series. Only a
+    // full-corpus run writes it: a SPARK_GRAFT_BENCH_ONLY subset run
+    // prints its results but must not replace the full-corpus sidecar
+    if (only.isEmpty) try {
       val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL_PATH",
         "/root/repo/bench_full_latest.json")
       val full = s"""{"total":${fmt(total)},"n_queries":${results.size}""" +

@@ -10102,8 +10102,10 @@ object MiniDelta {
             .LocalRelation]) snap
       else snap.persist()
     }
-    // configureSnapshotCache may have swapped the cache mid-miss; clear
-    // the orphaned instance (again) so the raced persist is released
+    // configureSnapshotCache may have swapped and cleared the cache after
+    // this call read `snapshotCache`: a load begun on the orphaned
+    // instance after its clear() was inserted there — clear it again so
+    // that persist is released instead of leaking
     if (cache ne snapshotCache) cache.clear()
     df
   }

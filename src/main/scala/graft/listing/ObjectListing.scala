@@ -56,9 +56,11 @@ object ObjectListing {
   def filesDF(spark: SparkSession, sfDir: String): DataFrame = {
     val cache = filesCache
     val df = cache.getOrElseUpdate(sfDir)(buildFilesDF(spark, sfDir).persist())
-    // configureFilesCache may have swapped the cache while this miss was
-    // in flight — the insert landed in the orphaned instance; clear it
-    // (again) so the raced persist is released instead of leaking
+    // the cache loads each key once (two cold callers share one persisted
+    // frame); but configureFilesCache may have swapped and cleared it
+    // after this call read `filesCache` — a load begun on the orphaned
+    // instance after its clear() was inserted there; clear it again so
+    // that persist is released instead of leaking
     if (cache ne filesCache) cache.clear()
     df
   }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, classic}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -75,6 +76,27 @@ class ListingSpec extends AnyFunSuite {
       ObjectListing.filesDF(spark, "/root/testdata/sf0.01")
       assert(!(ObjectListing.filesDF(spark, TestSpark.sfTiny) eq a))
     } finally ObjectListing.configureFilesCache(CacheConfig(100, 120000L))
+  }
+
+  test("two cold callers share one listing frame and it stays cached") {
+    import graft.catalog.CacheConfig
+    ObjectListing.configureFilesCache(CacheConfig(100, 120000L)) // cold
+    val start = new java.util.concurrent.CyclicBarrier(2)
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+    val callers = Seq.fill(2)(new Thread(() => {
+      start.await()
+      got.add(ObjectListing.filesDF(spark, TestSpark.sfTiny))
+    }))
+    callers.foreach(_.start())
+    callers.foreach(_.join())
+    val Seq(a, b) = got.toArray(Array.empty[DataFrame]).toSeq
+    assert(a eq b)
+    // a raced duplicate released through onEvict would unpersist the kept
+    // frame as well: CacheManager uncaches by plan equality
+    val cacheManager = spark.asInstanceOf[classic.SparkSession]
+      .sharedState.cacheManager
+    assert(cacheManager.lookupCachedData(a.asInstanceOf[classic.Dataset[_]])
+      .isDefined)
   }
 
   test("GlobalRowNumber == single-partition window row_number, distributed") {

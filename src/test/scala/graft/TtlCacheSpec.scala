@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.acl.AclCaches
@@ -62,6 +68,106 @@ class TtlCacheSpec extends AnyFunSuite {
     c.getOrElseUpdate("k")(5)
     c.invalidate("k")
     assert(evicted.toSeq == Seq(5) && c.get("k").isEmpty)
+  }
+
+  private def daemon(body: => Unit): Thread = {
+    val t = new Thread(() => body)
+    t.setDaemon(true)
+    t.start()
+    t
+  }
+
+  /** Starts `n` threads running `call` and returns once all of them are
+    * parked — a caller waiting on an in-flight load parks on its latch. */
+  private def parkedThreads(n: Int)(call: => Any): Seq[Thread] = {
+    val ts = Seq.fill(n)(daemon { call; () })
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (!ts.forall(_.getState == Thread.State.WAITING)) {
+      if (System.nanoTime() > deadline)
+        fail(s"threads never parked: ${ts.map(_.getState).mkString(", ")}")
+      Thread.`yield`()
+    }
+    ts
+  }
+
+  /** A thread whose load of `key` is in flight until `release` opens;
+    * `value == null` makes the load throw. */
+  private final class Loader(c: TtlCache[String, String], key: String,
+                             value: String) {
+    val release = new CountDownLatch(1)
+    @volatile var got: Either[Throwable, String] = _
+    private val entered = new CountDownLatch(1)
+    val thread = daemon {
+      got = Try(c.getOrElseUpdate(key) {
+        entered.countDown(); release.await()
+        if (value == null) throw new RuntimeException("load failed")
+        value
+      }).toEither
+    }
+    entered.await()
+  }
+
+  test("concurrent misses on one key compute once and share the instance") {
+    val evicted = new ConcurrentLinkedQueue[String]()
+    val c = new TtlCache[String, String](10, 0L, onEvict = evicted.add(_))
+    val computes = new AtomicInteger()
+    val owner = new Loader(c, "k", new String("v"))
+    val got = new ConcurrentLinkedQueue[String]()
+    val waiters = parkedThreads(7) {
+      got.add(c.getOrElseUpdate("k") { computes.incrementAndGet(); "dup" })
+    }
+    owner.release.countDown()
+    (owner.thread +: waiters).foreach(_.join())
+    val v = owner.got.toOption.get
+    assert(computes.get == 0)
+    assert(got.size == 7 && got.asScala.forall(_ eq v))
+    assert(c.get("k").exists(_ eq v))
+    assert(evicted.isEmpty)
+  }
+
+  test("a failed load reaches every waiter and the next call recomputes") {
+    val c = new TtlCache[String, String](10, 0L)
+    val owner = new Loader(c, "k", null)
+    val failures = new ConcurrentLinkedQueue[String]()
+    val waiters = parkedThreads(3) {
+      Try(c.getOrElseUpdate("k")("dup")).failed.foreach(
+        e => failures.add(e.getMessage))
+    }
+    owner.release.countDown()
+    (owner.thread +: waiters).foreach(_.join())
+    assert(owner.got.left.toOption.map(_.getMessage).contains("load failed"))
+    assert(failures.asScala.toSeq == Seq.fill(3)("load failed"))
+    assert(c.get("k").isEmpty && c.getOrElseUpdate("k")("v2") == "v2")
+  }
+
+  test("invalidate or clear during a load: the load is not inserted") {
+    for (drop <- Seq[TtlCache[String, String] => Unit](
+        _.invalidate("k"), _.clear())) {
+      val evicted = new ConcurrentLinkedQueue[String]()
+      val c = new TtlCache[String, String](10, 0L, onEvict = evicted.add(_))
+      val owner = new Loader(c, "k", "stale")
+      val waiter = new ConcurrentLinkedQueue[String]()
+      val joined = parkedThreads(1)(waiter.add(c.getOrElseUpdate("k")("dup")))
+      drop(c)
+      // a caller after the invalidation loads afresh, unblocked
+      assert(c.getOrElseUpdate("k")("fresh") == "fresh")
+      owner.release.countDown()
+      (owner.thread +: joined).foreach(_.join())
+      // the superseded value reaches its own caller and waiter only,
+      // and is released instead of inserted
+      assert(owner.got == Right("stale") && waiter.asScala.toSeq == Seq("stale"))
+      assert(c.get("k").contains("fresh"))
+      assert(evicted.asScala.toSeq == Seq("stale"))
+    }
+  }
+
+  test("a re-entrant load of the same key fails loudly, not a deadlock") {
+    val c = new TtlCache[String, Int](10, 0L)
+    val e = intercept[IllegalStateException] {
+      c.getOrElseUpdate("snapshot:t1")(c.getOrElseUpdate("snapshot:t1")(1))
+    }
+    assert(e.getMessage.contains("snapshot:t1"))
+    assert(c.getOrElseUpdate("snapshot:t1")(2) == 2) // nothing left in flight
   }
 
   test("AclCaches memoize file lists and perms under user:table keys") {
